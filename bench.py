@@ -28,6 +28,18 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_BASE_CONVS = {"sf0.001": 400, "sf0.01": 3800, "sf0.1": 38000, "sfbig": 152000}
 CACHE_DIR = "/tmp/deduputil_bench"
 
+
+def default_driver_mem() -> str:
+    """60% of MemAvailable: a fixed 16g heap got a leg OOM-killed on a host
+    with 15 GB of RAM and no swap (local mode runs everything in the driver)."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration):
+        return "8g"
+    return f"{max(kb * 6 // 10 // 1024, 1024)}m"
+
+
 #: shared session conf for every bench leg.  On a slow/contended sandbox
 #: host a low-parallelism leg can stall the whole JVM (GC + compute) past
 #: Spark's default 120 s heartbeat window, at which point HeartbeatReceiver
@@ -36,7 +48,7 @@ CACHE_DIR = "/tmp/deduputil_bench"
 #: 120000 ms" killed every 2-core suffix leg).  Benches measure dataflow,
 #: not liveness-detection latency — give the heartbeat generous rope.
 BENCH_CONF = {
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
     "spark.network.timeout": "800s",
     "spark.executor.heartbeatInterval": "30s",
 }
@@ -68,7 +80,6 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
 
     import __spark_entry__ as em
     from deduputil_spark.config import DedupConfig
-    from deduputil_spark.plans.pipeline import run_pipeline
     from deduputil_spark.session import get_spark
 
     corpus_path, n_turns = ensure_corpus(sf_dir)

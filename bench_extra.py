@@ -1,10 +1,11 @@
 #!/usr/bin/env python
 """Round-6 optimization instrumentation (NOT the official bench — bench.py is
 frozen for measurement; this file exists so guide §1 measurement — noop-sink
-isolation, per-stage pipeline breakdown, explain capture — has a home).
+isolation, cdc stage breakdown, explain capture — has a home).  The near-dup
+pipeline's per-layer split is `python3 perfbench/run.py --trace 1`, which
+times the production plan itself.
 
 Usage:
-  python bench_extra.py --stages            # pipeline_cluster stage breakdown
   python bench_extra.py --queries a,b,c     # time driver queries (count parity + noop)
   python bench_extra.py --explain a,b,c     # write plans/r06/<q><suffix>.txt
       [--suffix _before|_after]             #   (default _before)
@@ -47,55 +48,6 @@ def _noop(df, desc: str) -> float:
     el = time.monotonic() - t0
     df.sparkSession.sparkContext.setJobDescription(None)
     return round(el, 3)
-
-
-def run_stages() -> None:
-    """pipeline_cluster broken into its stages (mirrors run_pipeline_lean's
-    persists; per-stage actions shift persist costs onto the stage that
-    materializes them — attribution, not an official total)."""
-    from deduputil_spark.cache import release_caches, track
-    from deduputil_spark.config import DedupConfig
-    from deduputil_spark.operators.assemble import assemble_documents
-    from deduputil_spark.operators.cluster import connected_components
-    from deduputil_spark.operators.lsh import candidate_pairs
-    from deduputil_spark.operators.minhash import lsh_bands, minhash_signatures_numpy
-    from deduputil_spark.operators.verify import jaccard_verify_docs
-
-    corpus_path, n_turns = ensure_corpus(SF_DIR)
-    spark = _spark()
-    t = spark.read.parquet(corpus_path)
-    cfg = DedupConfig()
-
-    # warm run (JIT) exactly like bench.py
-    from deduputil_spark.plans.pipeline import run_pipeline_lean
-
-    run_pipeline_lean(spark, t, cfg).clusters.count()
-    release_caches()
-    spark.catalog.clearCache()
-
-    out: dict[str, float] = {}
-    t_all = time.monotonic()
-    docs = track(assemble_documents(t))
-    out["assemble"] = _noop(docs, "stage: assemble")
-    sigs = minhash_signatures_numpy(docs, cfg)
-    bands = lsh_bands(sigs, cfg, band_key="xxhash")
-    cands = track(candidate_pairs(bands, cfg))
-    out["minhash+bands+cands"] = _noop(cands, "stage: minhash+bands+cands")
-    verified = track(jaccard_verify_docs(cands, docs, cfg.shingle_k, threshold=cfg.jaccard_threshold))
-    out["verify"] = _noop(verified, "stage: verify")
-    t0 = time.monotonic()
-    spark.sparkContext.setJobDescription("stage: cc")
-    clusters = connected_components(
-        verified.select("conv_a", "conv_b"), cfg.max_cc_iterations,
-        all_vertices=docs.select("conv_id"),
-    )
-    n = clusters.count()
-    out["cc+count"] = round(time.monotonic() - t0, 3)
-    out["total"] = round(time.monotonic() - t_all, 3)
-    out["n_clustered"] = n
-    release_caches()
-    spark.stop()
-    print(json.dumps(out))
 
 
 def run_cdc() -> None:
@@ -173,9 +125,7 @@ def run_explain(names: list[str], suffix: str) -> None:
 
 if __name__ == "__main__":
     args = sys.argv[1:]
-    if "--stages" in args:
-        run_stages()
-    elif "--cdc" in args:
+    if "--cdc" in args:
         run_cdc()
     elif "--queries" in args:
         run_queries(args[args.index("--queries") + 1].split(","))

@@ -49,7 +49,7 @@ class DedupConfig:
     shuffle_partitions: int = 32
     salt_buckets: int = 8           # salting factor for hot LSH band keys
     hot_bucket_cap: int = 2000      # per-bucket pair-generation cap (logged when hit)
-    max_pair_degree: int | None = None  # per-doc candidate-degree cap (lsh.cap_pair_degree); None = off
+    max_pair_degree: int | None = None  # per-doc candidate-degree cap, applied by the pipeline (lsh.cap_pair_degree); None = off
 
     def __post_init__(self) -> None:
         if self.lsh_bands * self.lsh_rows != self.num_perm:

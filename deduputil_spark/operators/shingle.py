@@ -44,52 +44,3 @@ def shingles(docs: DataFrame, k: int = 5, text_col: str = "doc_text", distinct: 
         ).alias("shingle"),
     )
     return out.distinct() if distinct else out
-
-
-SHINGLE_KEY_P = (1 << 57) - 13  # keeps acc*31+x < 2^63 (ANSI-safe), ~0 collisions
-
-
-def shingle_keys(docs: DataFrame, k: int = 5, text_col: str = "doc_text") -> DataFrame:
-    """Numeric shingle keys: (conv_id, skey long) — narrow map, NO string
-    construction.
-
-    Each token is xxhash64-reduced once; a k-gram key is the polynomial fold
-    acc·31 + h (mod 2^57-13) over the window.  Building 10^8+ shingle STRINGS
-    (substring copies) costs more than the rest of the signature stage
-    combined; this keeps the hot path in long arithmetic.  Same set semantics
-    as `shingles` up to a 2^-57 collision rate.
-    """
-    k = int(k)
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    th = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(SHINGLE_KEY_P)))
-    fold = lambda arr: F.aggregate(  # noqa: E731
-        arr, F.lit(0).cast("long"), lambda acc, x: F.pmod(acc * 31 + x, F.lit(SHINGLE_KEY_P))
-    )
-    return docs.select("conv_id", th.alias("th")).select(
-        "conv_id",
-        F.explode(
-            F.when(
-                F.size("th") >= k,
-                F.transform(
-                    F.sequence(F.lit(0), F.size("th") - k), lambda i: fold(F.slice(F.col("th"), i + 1, k))
-                ),
-            ).otherwise(F.array(fold(F.col("th"))))
-        ).alias("skey"),
-    )
-
-
-def shingles_sql(table: str, k: int = 5, text_col: str = "doc_text", id_col: str = "conv_id") -> str:
-    """DuckDB-equivalent SQL for `shingles` (oracle builder)."""
-    return f"""
-    SELECT DISTINCT {id_col} AS conv_id,
-      CASE WHEN len(toks) >= {k}
-           THEN array_to_string(toks[i+1 : i+{k}], ' ')
-           ELSE array_to_string(toks, ' ') END AS shingle
-    FROM (
-      SELECT {id_col}, regexp_split_to_array(trim({text_col}), '\\s+') AS toks FROM {table}
-    ), LATERAL (
-      SELECT unnest(CASE WHEN len(toks) >= {k}
-                         THEN range(0, len(toks) - {k} + 1)
-                         ELSE [0] END) AS i
-    )
-    """

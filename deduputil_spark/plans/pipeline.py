@@ -1,15 +1,18 @@
-"""The flagship plan: transcripts → near-duplicate clusters, resumable.
+"""The flagship plan: transcripts → near-duplicate clusters.
 
-Stage graph (each stage = one checkpoint table + one metrics row):
+One dataflow, `run_pipeline_lean`:
 
-  assemble → chunk → blocks/meta (exact dedup)
-                  ↘ shingle → minhash → bands → candidates → verify → clusters
+  assemble → signatures → (bands) → candidates → verified → clusters
 
-Checkpointing (north rule: "every stage checkpoints per-partition lineage and
-metrics … so the pipeline resumes mid-run"): a stage whose checkpoint exists
-with the SAME config hash is read back, not recomputed — kill the driver after
-stage k, rerun, and stages 1..k are loaded while k+1.. continue.  Metrics rows
-record stage, rows_out, wall_ms, config_hash, partitions.
+Without a checkpoint directory it is one lazy plan with only the persists
+correctness needs — no count jobs, no metrics.  With one, the same calls in
+the same order go through `Runner`, which makes the run resumable and metered
+(north rule: "every stage checkpoints per-partition lineage and metrics … so
+the pipeline resumes mid-run"): each stage is written as a table keyed by
+stage, dataflow version and config hash, read back and counted.  A stage
+whose table already exists is read back, not recomputed — kill the driver
+after stage k, rerun, and stages 1..k are loaded while k+1.. continue.
+Metrics rows record stage, rows_out, wall_ms, config_hash, partitions.
 """
 
 from __future__ import annotations
@@ -26,13 +29,15 @@ from deduputil_spark.cache import track
 from deduputil_spark.config import DedupConfig
 from deduputil_spark.io import read_table, table_exists, write_table
 from deduputil_spark.operators.assemble import assemble_documents
-from deduputil_spark.operators.chunk import chunk_documents
 from deduputil_spark.operators.cluster import connected_components
-from deduputil_spark.operators.dedup import build_block_store, build_file_meta
-from deduputil_spark.operators.lsh import candidate_pairs
-from deduputil_spark.operators.minhash import lsh_bands, minhash_signatures, minhash_signatures_numpy
-from deduputil_spark.operators.shingle import shingle_keys, shingles
-from deduputil_spark.operators.verify import jaccard_verify, jaccard_verify_docs
+from deduputil_spark.operators.lsh import candidate_pairs, cap_pair_degree
+from deduputil_spark.operators.minhash import lsh_bands, minhash_signatures_numpy
+from deduputil_spark.operators.verify import jaccard_verify_docs
+
+#: Part of every checkpoint location.  Bump it whenever a stage's output can
+#: change under the same config hash (a new signature scheme, say), so tables
+#: an older dataflow wrote are never read back as this one's.
+DATAFLOW_VERSION = 2
 
 
 @dataclass
@@ -49,13 +54,16 @@ class StageMetric:
 class PipelineResult:
     clusters: DataFrame
     verified_pairs: DataFrame
-    blocks: DataFrame
-    file_meta: DataFrame
     metrics: list[StageMetric] = field(default_factory=list)
 
 
 class Runner:
-    """Checkpoint-aware stage runner."""
+    """Checkpoint-aware stage runner.
+
+    With a `checkpoint_dir`, each stage is written as a table (or read back
+    if a previous run wrote it), then counted into a metrics row.  Without
+    one, a stage is just persisted (tracked — the caller releases) or, with
+    `persist=False`, left lazy: no count jobs and no metrics."""
 
     def __init__(self, spark: SparkSession, cfg, checkpoint_dir: str | None):
         # cfg is duck-typed: anything with config_hash() (DedupConfig, _SuffixCfg)
@@ -67,35 +75,31 @@ class Runner:
             os.makedirs(checkpoint_dir, exist_ok=True)
 
     def _loc(self, stage: str) -> str:
-        return os.path.join(self.dir, f"{stage}_{self.cfg.config_hash()}")
+        return os.path.join(self.dir, f"{stage}_v{DATAFLOW_VERSION}_{self.cfg.config_hash()}")
 
-    def run(self, stage: str, build, count_rows: bool = True) -> DataFrame:
+    def run(self, stage: str, build, persist: bool = True) -> DataFrame:
+        if not self.dir:
+            return track(build()) if persist else build()
         t0 = time.monotonic()
-        resumed = False
-        if self.dir and table_exists(self.spark, self._loc(stage)):
-            df = read_table(self.spark, self._loc(stage))
-            resumed = True
-        else:
-            df = build()
-            if self.dir:
-                write_table(df, self._loc(stage))
-                df = read_table(self.spark, self._loc(stage))
-            else:
-                # no checkpoint table -> persist, or every downstream stage
-                # (and this count) recomputes the entire upstream lineage
-                df = track(df)
-        rows = df.count() if count_rows else -1
+        loc = self._loc(stage)
+        resumed = table_exists(self.spark, loc)
+        if not resumed:
+            write_table(build(), loc)
+        df = read_table(self.spark, loc)
+        self.record(stage, df.count(), int((time.monotonic() - t0) * 1000), df.rdd.getNumPartitions(), resumed)
+        return df
+
+    def record(self, stage: str, rows_out: int, wall_ms: int = 0, partitions: int = -1, resumed: bool = False):
         self.metrics.append(
             StageMetric(
                 stage=stage,
-                rows_out=rows,
-                wall_ms=int((time.monotonic() - t0) * 1000),
-                partitions=df.rdd.getNumPartitions() if count_rows else -1,
+                rows_out=rows_out,
+                wall_ms=wall_ms,
+                partitions=partitions,
                 config_hash=self.cfg.config_hash(),
                 resumed=resumed,
             )
         )
-        return df
 
     def dump_metrics(self) -> None:
         if not self.dir:
@@ -110,87 +114,34 @@ def run_pipeline_lean(
     spark: SparkSession,
     transcripts: DataFrame,
     cfg: DedupConfig | None = None,
-) -> PipelineResult:
-    """Production dataflow shape: no per-stage counts/checkpoints — one lazy
-    plan with only the persists correctness requires (docs feeds 3 consumers,
-    candidate pairs feed 3 joins, verified feeds the CC fixpoint).  This is
-    what runs when you just want clusters written to a table; the metered
-    `run_pipeline` is for resumable checkpointed runs."""
-    cfg = cfg or DedupConfig()
-    docs = track(assemble_documents(transcripts))
-    # persist the COMPACT signature table (one row/doc) instead of the
-    # bands×-bigger exploded band table; bands re-derive from the cache with
-    # one JVM explode per consumer (see candidate_pairs persist_bands)
-    sigs = track(minhash_signatures_numpy(docs, cfg))
-    bands = lsh_bands(sigs, cfg, band_key="xxhash")  # no per-band string build
-    cands = track(candidate_pairs(bands, cfg, persist_bands=False))
-    verified = track(jaccard_verify_docs(cands, docs, cfg.shingle_k, threshold=cfg.jaccard_threshold))
-    clusters = connected_components(
-        verified.select("conv_a", "conv_b"), cfg.max_cc_iterations,
-        all_vertices=docs.select("conv_id"),
-    )
-    return PipelineResult(clusters=clusters, verified_pairs=verified, blocks=None, file_meta=None)
-
-
-def run_pipeline(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    cfg: DedupConfig | None = None,
     checkpoint_dir: str | None = None,
-    minhash_family: str = "xxhash",
-    with_exact_dedup: bool = True,
 ) -> PipelineResult:
+    """Transcripts → near-duplicate clusters, the one near-dup dataflow.
+
+    With `checkpoint_dir=None` (production shape) the plan persists only what
+    correctness requires — docs (3 consumers), signatures, candidate pairs
+    (3 joins) and verified pairs (the CC input) — keeps the bands lazy and
+    leaves the clusters unpersisted; `metrics` stays empty.  With a
+    `checkpoint_dir` every stage becomes a resumable, counted checkpoint
+    table (see `Runner`)."""
     cfg = cfg or DedupConfig()
     r = Runner(spark, cfg, checkpoint_dir)
-
     docs = r.run("assemble", lambda: assemble_documents(transcripts))
-    track(docs)
-
-    if with_exact_dedup:
-        chunks = r.run("chunks", lambda: chunk_documents(docs, cfg))
-        blocks = r.run("blocks", lambda: build_block_store(chunks))
-        meta = r.run("file_meta", lambda: build_file_meta(chunks, blocks))
-    else:
-        chunks = blocks = meta = None
-
-    # Signature path choices (fast→oracle-exact):
-    #  - "numpy": vectorized mapInPandas minhash, NO exploded-shingle shuffle
-    #    at all (the scale default);
-    #  - "keys"/"xxhash": relational minhash over a lazy narrow shingle map
-    #    (min-over-multiset ⇒ no distinct() shuffle needed);
-    #  - "md5": bit-identical to the DuckDB oracle (correctness runs).
-    if minhash_family == "numpy":
-        sigs = r.run("minhash", lambda: minhash_signatures_numpy(docs, cfg))
-    else:
-        if minhash_family == "keys":
-            sh = shingle_keys(docs, cfg.shingle_k)
-        else:
-            sh = shingles(docs, cfg.shingle_k, distinct=False)
-        sigs = r.run("minhash", lambda: minhash_signatures(sh, cfg, family=minhash_family))
-    bands = r.run("bands", lambda: lsh_bands(sigs, cfg))
+    # persist the COMPACT signature table (one row/doc) instead of the
+    # bands×-bigger exploded band table; bands re-derive from it with one JVM
+    # explode per consumer (see candidate_pairs persist_bands)
+    sigs = r.run("signatures", lambda: minhash_signatures_numpy(docs, cfg))
+    bands = lsh_bands(sigs, cfg, band_key="xxhash")  # no per-band string build
     if cfg.max_pair_degree is None:
-        cands = r.run("candidates", lambda: candidate_pairs(bands, cfg))
+        cands = r.run("candidates", lambda: candidate_pairs(bands, cfg, persist_bands=False))
     else:
-        # degree cap ON: meter the raw and capped candidate sets as separate
-        # stages and emit the dropped-edge count as its own metrics row —
+        # degree cap ON: the raw and capped candidate sets are separate stages
+        # and a metered run records the dropped-edge count as its own row —
         # thinning is never silent (the contract lsh.cap_pair_degree promises)
-        from dataclasses import replace as _replace
-
-        from deduputil_spark.operators.lsh import cap_pair_degree
-
-        raw = r.run("candidates_raw", lambda: candidate_pairs(bands, _replace(cfg, max_pair_degree=None)))
+        raw = r.run("candidates_raw", lambda: candidate_pairs(bands, cfg, persist_bands=False))
         cands = r.run("candidates", lambda: cap_pair_degree(raw, cfg.max_pair_degree))
-        raw_n, cap_n = r.metrics[-2].rows_out, r.metrics[-1].rows_out
-        r.metrics.append(
-            StageMetric(
-                stage="degree_cap_dropped",
-                rows_out=raw_n - cap_n,
-                wall_ms=0,
-                partitions=-1,
-                config_hash=cfg.config_hash(),
-                resumed=False,
-            )
-        )
+        if r.dir:
+            r.record("degree_cap_dropped", r.metrics[-2].rows_out - r.metrics[-1].rows_out)
     # verify prunes DOCS before exploding shingles: cost scales with the
     # candidate set, not the corpus
     verified = r.run(
@@ -204,15 +155,10 @@ def run_pipeline(
             cfg.max_cc_iterations,
             all_vertices=docs.select("conv_id"),
         ),
+        persist=False,
     )
     r.dump_metrics()
-    return PipelineResult(
-        clusters=clusters,
-        verified_pairs=verified,
-        blocks=blocks,
-        file_meta=meta,
-        metrics=r.metrics,
-    )
+    return PipelineResult(clusters=clusters, verified_pairs=verified, metrics=r.metrics)
 
 
 @dataclass
@@ -245,8 +191,8 @@ def run_exact_substring(
     text_col: str = "text",
 ) -> ExactSubstringResult:
     """The exact-substring dedup plan (Lee et al. ExactSubstr): corpus-wide
-    duplicated spans → cleaned corpus, as two resumable metered stages
-    (same Runner/checkpoint semantics as `run_pipeline`: kill after the
+    duplicated spans → cleaned corpus, as two stages (same Runner/checkpoint
+    semantics as `run_pipeline_lean`: with a `checkpoint_dir`, kill after the
     spans stage, rerun, and the spans table is read back, not recomputed).
     `method="rolling"` is the scale path (8 bytes/position on the wire,
     exact gram re-verification)."""

@@ -4,6 +4,7 @@ checkpoint resume (SURVEY.md §5.4-5.6)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
@@ -13,12 +14,17 @@ from deduputil_spark.config import DedupConfig
 from deduputil_spark.operators.assemble import assemble_documents
 from deduputil_spark.operators.cluster import connected_components
 from deduputil_spark.operators.lsh import bucket_skew_report, candidate_pairs
-from deduputil_spark.operators.minhash import lsh_bands, minhash_jaccard_estimate, minhash_signatures
+from deduputil_spark.operators.minhash import (
+    lsh_bands,
+    minhash_jaccard_estimate,
+    minhash_signatures,
+    minhash_signatures_numpy,
+)
 from deduputil_spark.operators.shingle import shingles
 from deduputil_spark.operators.simhash import simhash_candidates, simhash_signatures
 from deduputil_spark.operators.substring import containment_candidates, verify_substring
 from deduputil_spark.operators.verify import jaccard_verify
-from deduputil_spark.plans.pipeline import pair_recall, run_pipeline
+from deduputil_spark.plans.pipeline import pair_recall, run_pipeline_lean
 
 CFG = DedupConfig()
 
@@ -33,9 +39,19 @@ def shingle_df(docs):
     return shingles(docs, CFG.shingle_k).cache()
 
 
-@pytest.fixture(scope="module", params=["xxhash", "md5"])
+@pytest.fixture(scope="module", params=["oph", "md5"])
 def family(request):
     return request.param
+
+
+def signature_bands(docs, shingle_df, cfg, family="oph"):
+    """(signatures, bands) from the production path (numpy OPH signatures,
+    xxhash band keys) or from the md5 oracle form."""
+    if family == "md5":
+        sigs = minhash_signatures(shingle_df, cfg)
+        return sigs, lsh_bands(sigs, cfg)
+    sigs = minhash_signatures_numpy(docs, cfg)
+    return sigs, lsh_bands(sigs, cfg, band_key="xxhash")
 
 
 def brute_force_jaccard(shingle_df, threshold):
@@ -57,10 +73,10 @@ def brute_force_jaccard(shingle_df, threshold):
     )
 
 
-def test_minhash_estimates_jaccard(spark, shingle_df, family):
+def test_minhash_estimates_jaccard(spark, docs, shingle_df, family):
     """Signature agreement ≈ true Jaccard within ε on true-positive pairs."""
     truth = brute_force_jaccard(shingle_df, 0.5).cache()
-    sigs = minhash_signatures(shingle_df, CFG, family=family)
+    sigs, _ = signature_bands(docs, shingle_df, CFG, family)
     est = minhash_jaccard_estimate(sigs, truth.select("conv_a", "conv_b"))
     joined = truth.join(est, ["conv_a", "conv_b"]).collect()
     assert len(joined) > 0
@@ -68,19 +84,20 @@ def test_minhash_estimates_jaccard(spark, shingle_df, family):
         assert abs(r["jaccard"] - r["est_jaccard"]) < 0.15, r
 
 
-def test_lsh_recall_vs_brute_force(spark, shingle_df, family):
+def test_lsh_recall_vs_brute_force(spark, docs, shingle_df, family):
     """LSH candidates must cover ≥99% of true pairs above threshold."""
     truth = {(r["conv_a"], r["conv_b"]) for r in brute_force_jaccard(shingle_df, CFG.jaccard_threshold).collect()}
     assert truth, "corpus must contain planted high-jaccard pairs"
-    sigs = minhash_signatures(shingle_df, CFG, family=family)
-    cands = {(r["conv_a"], r["conv_b"]) for r in candidate_pairs(lsh_bands(sigs, CFG), CFG).collect()}
+    _, bands = signature_bands(docs, shingle_df, CFG, family)
+    cands = {(r["conv_a"], r["conv_b"]) for r in candidate_pairs(bands, CFG).collect()}
     missed = truth - cands
     recall = 1 - len(missed) / len(truth)
     assert recall >= 0.99, f"LSH recall {recall}: missed {sorted(missed)[:5]}"
 
 
 def test_pipeline_recall_and_collision_separation(spark, transcripts, corpus, shingle_df):
-    res = run_pipeline(spark, transcripts, CFG, checkpoint_dir=None)
+    res = run_pipeline_lean(spark, transcripts, CFG)
+    assert res.metrics == []  # production shape: no count jobs, no metrics
     clusters = res.clusters.cache()
     truth = spark.createDataFrame(corpus.truth_pairs)
     # the gate (FIXTURES.md): recall over planted pairs whose TRUE Jaccard
@@ -136,19 +153,40 @@ def test_connected_components_vs_union_find(spark, driver_threshold):
             assert got[m] == want, (m, got[m], want)
 
 
+def _labels(res):
+    return sorted((r["conv_id"], r["cluster_id"]) for r in res.clusters.collect())
+
+
 def test_checkpoint_resume(spark, transcripts):
     with tempfile.TemporaryDirectory() as d:
-        r1 = run_pipeline(spark, transcripts, CFG, checkpoint_dir=d)
-        c1 = sorted((r["conv_id"], r["cluster_id"]) for r in r1.clusters.collect())
+        r1 = run_pipeline_lean(spark, transcripts, CFG, checkpoint_dir=d)
+        c1 = _labels(r1)
+        assert [m.stage for m in r1.metrics] == ["assemble", "signatures", "candidates", "verified", "clusters"]
         assert not any(m.resumed for m in r1.metrics)
-        r2 = run_pipeline(spark, transcripts, CFG, checkpoint_dir=d)
-        c2 = sorted((r["conv_id"], r["cluster_id"]) for r in r2.clusters.collect())
+        r2 = run_pipeline_lean(spark, transcripts, CFG, checkpoint_dir=d)
+        c2 = _labels(r2)
+        assert len(r2.metrics) == 5
         assert all(m.resumed for m in r2.metrics), [m for m in r2.metrics if not m.resumed]
         assert c1 == c2
+        # the metered run computes the same clusters as the production shape
+        assert _labels(run_pipeline_lean(spark, transcripts, CFG)) == c1
         # different config hash must NOT resume
         cfg3 = DedupConfig(shingle_k=7)
-        r3 = run_pipeline(spark, transcripts, cfg3, checkpoint_dir=d)
+        r3 = run_pipeline_lean(spark, transcripts, cfg3, checkpoint_dir=d)
         assert not any(m.resumed for m in r3.metrics)
+
+
+def test_stale_dataflow_checkpoint_not_resumed(spark, transcripts, tmp_path):
+    """A table an older dataflow wrote under the same config hash (stage
+    locations without the dataflow version) must never be read back."""
+    d = str(tmp_path)
+    planted = spark.createDataFrame([("stale", "stale")], "conv_id string, cluster_id string")
+    for stage in ["assemble", "minhash", "signatures", "bands", "candidates", "verified", "clusters"]:
+        planted.write.parquet(os.path.join(d, f"{stage}_{CFG.config_hash()}"))
+    res = run_pipeline_lean(spark, transcripts, CFG, checkpoint_dir=d)
+    assert res.metrics and not any(m.resumed for m in res.metrics)
+    ids = {r["conv_id"] for r in res.clusters.collect()}
+    assert "stale" not in ids and len(ids) == transcripts.select("conv_id").distinct().count()
 
 
 def test_hot_bucket_salting_preserves_recall(spark, shingle_df):
@@ -159,9 +197,7 @@ def test_hot_bucket_salting_preserves_recall(spark, shingle_df):
     # 12 identical docs -> every band is one bucket of size 12 (>> cap=3)
     text = " ".join(f"tok{i}" for i in range(50))
     docs = spark.createDataFrame([(f"h{i:02d}", text) for i in range(12)], "conv_id string, doc_text string")
-    sh = shingles(docs, cfg_hot.shingle_k)
-    sigs = minhash_signatures(sh, cfg_hot, family="xxhash")
-    bands = lsh_bands(sigs, cfg_hot)
+    _, bands = signature_bands(docs, None, cfg_hot)
     rep = bucket_skew_report(bands, cfg_hot).collect()[0]
     assert rep["hot_buckets"] > 0, "identical docs must form hot buckets"
     cands = {(r["conv_a"], r["conv_b"]) for r in candidate_pairs(bands, cfg_hot).collect()}
@@ -175,9 +211,9 @@ def test_hot_bucket_salting_preserves_recall(spark, shingle_df):
     assert len(labels) == 12 and len(set(labels.values())) == 1, labels
 
 
-def test_skew_report_sees_hot_boilerplate(spark, shingle_df):
-    sigs = minhash_signatures(shingle_df, CFG, family="xxhash")
-    rep = bucket_skew_report(lsh_bands(sigs, CFG), CFG).collect()[0]
+def test_skew_report_sees_hot_boilerplate(spark, docs, shingle_df):
+    _, bands = signature_bands(docs, shingle_df, CFG)
+    rep = bucket_skew_report(bands, CFG).collect()[0]
     assert rep["n_buckets"] > 0
     assert rep["max_bucket"] >= 1
 
@@ -230,7 +266,7 @@ def test_oph_signature_estimator_quality():
     short = np.unique(rng.integers(0, MERSENNE_P, 9))
     s = oph_signature(short, k, edges)
     assert len(s) == k and (s < MERSENNE_P).all()
-    # empty doc convention matches kperm: all zeros
+    # empty doc: all zeros
     assert (oph_signature(np.zeros(0, dtype=np.int64), k, edges) == 0).all()
 
 
@@ -252,7 +288,7 @@ def test_star_cc_on_path_graph(spark):
     assert rounds <= 16, f"star alternation took {rounds} rounds on a 10k chain (want O(log n))"
 
 
-def test_lsh_band_parameter_frontier(spark, shingle_df):
+def test_lsh_band_parameter_frontier(spark, docs, shingle_df):
     """b×r sweep at num_perm=128: recall (vs brute-force J≥0.7 truth) and
     candidate volume for (64,2), (32,4), (16,8).  The default (32,4) must sit
     on the frontier: ≥0.99 recall with fewer candidates than (64,2)."""
@@ -264,11 +300,8 @@ def test_lsh_band_parameter_frontier(spark, shingle_df):
     stats = {}
     for bands, rows in [(64, 2), (32, 4), (16, 8)]:
         cfg = DedupConfig(lsh_bands=bands, lsh_rows=rows)
-        sigs = minhash_signatures(shingle_df, cfg, family="xxhash")
-        cands = {
-            (r["conv_a"], r["conv_b"])
-            for r in candidate_pairs(lsh_bands(sigs, cfg), cfg).collect()
-        }
+        _, band_df = signature_bands(docs, shingle_df, cfg)
+        cands = {(r["conv_a"], r["conv_b"]) for r in candidate_pairs(band_df, cfg).collect()}
         recall = len(truth & cands) / len(truth)
         stats[(bands, rows)] = (recall, len(cands))
     rec_default, n_default = stats[(32, 4)]
@@ -329,18 +362,16 @@ def test_cap_pair_degree_thins_hot_docs_deterministically(spark):
     rows2 = {(r["conv_a"], r["conv_b"]) for r in cap_pair_degree(pairs, cap).collect()}
     assert rows == rows2
     out.unpersist()
-    # the knob routes through candidate_pairs via DedupConfig
+    # the knob is a DedupConfig field (the pipeline applies it)
     assert DedupConfig(max_pair_degree=123).max_pair_degree == 123
 
 
-def test_degree_cap_dropped_edges_metered(spark, transcripts):
-    """VERDICT r3 #8: with max_pair_degree set, run_pipeline emits a
-    `degree_cap_dropped` metrics row equal to raw-minus-capped candidate
-    counts — thinning is observable, never silent."""
-    from deduputil_spark.plans.pipeline import run_pipeline
-
+def test_degree_cap_dropped_edges_metered(spark, transcripts, tmp_path):
+    """VERDICT r3 #8: with max_pair_degree set, a metered (checkpointed)
+    run_pipeline_lean emits a `degree_cap_dropped` metrics row equal to
+    raw-minus-capped candidate counts — thinning is observable, never silent."""
     cfg = DedupConfig(max_pair_degree=3)
-    res = run_pipeline(spark, transcripts, cfg, checkpoint_dir=None, with_exact_dedup=False)
+    res = run_pipeline_lean(spark, transcripts, cfg, checkpoint_dir=str(tmp_path))
     by_stage = {m.stage: m for m in res.metrics}
     assert "candidates_raw" in by_stage and "candidates" in by_stage
     assert "degree_cap_dropped" in by_stage
