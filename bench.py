@@ -29,26 +29,15 @@ SF_BASE_CONVS = {"sf0.001": 400, "sf0.01": 3800, "sf0.1": 38000, "sfbig": 152000
 CACHE_DIR = "/tmp/deduputil_bench"
 
 
-def default_driver_mem() -> str:
-    """60% of MemAvailable: a fixed 16g heap got a leg OOM-killed on a host
-    with 15 GB of RAM and no swap (local mode runs everything in the driver)."""
-    try:
-        with open("/proc/meminfo") as f:
-            kb = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
-    except (OSError, StopIteration):
-        return "8g"
-    return f"{max(kb * 6 // 10 // 1024, 1024)}m"
-
-
 #: shared session conf for every bench leg.  On a slow/contended sandbox
 #: host a low-parallelism leg can stall the whole JVM (GC + compute) past
 #: Spark's default 120 s heartbeat window, at which point HeartbeatReceiver
 #: declares the in-process executor dead and tears the context down
 #: mid-job (observed r5: "no recent heartbeats: 321934 ms exceeds timeout
 #: 120000 ms" killed every 2-core suffix leg).  Benches measure dataflow,
-#: not liveness-detection latency — give the heartbeat generous rope.
+#: not liveness-detection latency — give the heartbeat generous rope.  The
+#: driver heap is `get_spark`'s default (`session.default_driver_mem`).
 BENCH_CONF = {
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
     "spark.network.timeout": "800s",
     "spark.executor.heartbeatInterval": "30s",
 }

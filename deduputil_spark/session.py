@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem() -> str:
+    """60% of MemAvailable: a fixed 16g heap got a bench leg OOM-killed on a
+    host with 15 GB of RAM and no swap (local mode runs everything in the
+    driver).  8g when /proc/meminfo is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration):
+        return "8g"
+    return f"{max(kb * 6 // 10 // 1024, 1024)}m"
+
+
 def get_spark(
     app_name: str = "deduputil-spark",
     master: str | None = None,
@@ -33,7 +45,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

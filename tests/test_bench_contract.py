@@ -31,4 +31,8 @@ def test_benchmark_package_calls_bind():
         (w.extract_turns, (sentinel, "pkg"), {}),
     ]
     for fn, args, kwargs in calls:
-        inspect.signature(fn).bind(*args, **kwargs)
+        bound = inspect.signature(fn).bind(*args, **kwargs)
+        if fn in (w.duplicated_spans, w.strip_duplicated_spans):
+            # "rolling" is passed positionally: without a `method` parameter
+            # it would bind to `id_col` and the bind alone would still pass
+            assert bound.arguments.get("method") == "rolling", fn.__name__
