@@ -11,9 +11,10 @@ Design for oracle exactness:
   (no float-rounding hash risk); cosine uses round(…, 6) double arithmetic.
 - Everything is aliased identically on both sides.
 
-Non-SQL-expressible stages (CDC pandas-UDF chunker, full transcript pipeline,
-round-trip reconstruction) are included WITHOUT oracle entries (rows-only
-checks) and covered by the repo's own pytest oracles instead.
+Every query carries an oracle.  The three whose outputs SQL cannot
+recompute (CDC chunk stats, the full transcript pipeline, the CDC round trip)
+are oracled by golden fixtures that scalar Spark-free code precomputes
+(tests/fixtures/gen_fixtures.py).
 """
 
 from __future__ import annotations
@@ -28,6 +29,9 @@ from deduputil_spark.config import DedupConfig
 
 # --- shared small configs (kept tiny so DuckDB oracles run fast at sf0.01) ---
 FSP_BS = 128          # documents are 48-553 chars; 4096 would be all-tail
+# the byte chunker that packages ship; the char-stride FSP oracles equal it
+# because every documents.parquet text is ASCII (one byte per character)
+FSP_CFG = DedupConfig(chunk_algo="fsp", block_size=FSP_BS)
 SHINGLE_K = 5
 NUM_PERM = 16
 BANDS, ROWS = 4, 4
@@ -75,14 +79,14 @@ FROM events GROUP BY user_id
 
 
 # ---------------------------------------------------------------------------
-# C1 — FSP chunking (pure-SQL char-stride; byte path is pytest-covered)
+# C1 — FSP chunking (the byte chunker, oracled by char-stride SQL)
 # ---------------------------------------------------------------------------
 
 def q_fsp_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deduputil_spark.operators.chunk import chunk_fsp_sql
+    from deduputil_spark.operators.chunk import chunk_documents
 
     docs = _docs(spark, sf_dir).select(F.col("doc_id").cast("string").alias("conv_id"), F.col("text").alias("doc_text"))
-    ch = chunk_fsp_sql(docs, FSP_BS)
+    ch = chunk_documents(docs, FSP_CFG)
     return ch.filter(~F.col("is_tail")).select(
         F.col("conv_id").alias("doc_id"),
         "chunk_idx",
@@ -101,10 +105,10 @@ FROM documents, LATERAL (SELECT unnest(range(0, CAST(floor(length(text)/{FSP_BS}
 
 
 def q_fsp_tails(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deduputil_spark.operators.chunk import chunk_fsp_sql
+    from deduputil_spark.operators.chunk import chunk_documents
 
     docs = _docs(spark, sf_dir).select(F.col("doc_id").cast("string").alias("conv_id"), F.col("text").alias("doc_text"))
-    ch = chunk_fsp_sql(docs, FSP_BS)
+    ch = chunk_documents(docs, FSP_CFG)
     return ch.filter(F.col("is_tail")).select(
         F.col("conv_id").alias("doc_id"),
         F.col("md5").alias("tail_md5"),
@@ -152,10 +156,10 @@ SELECT chunk_md5 AS block_md5, count(*) AS refcount FROM ch GROUP BY 1
 def q_dedup_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 dedup-rate aggregates grouped by documents.source (integer-exact)."""
     docs = _docs(spark, sf_dir)
-    from deduputil_spark.operators.chunk import chunk_fsp_sql
+    from deduputil_spark.operators.chunk import chunk_documents
 
     d2 = docs.select(F.col("doc_id").cast("string").alias("conv_id"), F.col("text").alias("doc_text"), "source")
-    ch = chunk_fsp_sql(d2.select("conv_id", "doc_text"), FSP_BS).filter(~F.col("is_tail"))
+    ch = chunk_documents(d2.select("conv_id", "doc_text"), FSP_CFG).filter(~F.col("is_tail"))
     joined = ch.join(d2.select("conv_id", "source"), "conv_id")
     return joined.groupBy("source").agg(
         F.count(F.lit(1)).alias("total_blocks"),
@@ -307,13 +311,13 @@ def q_bsim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 — reference bsim weighted block-frequency similarity
     (/root/reference/src/bsim.c:122-294), integer-exact components over FSP
     chunk md5 multisets on the LSH candidate pairs."""
-    from deduputil_spark.operators.chunk import chunk_fsp_sql
+    from deduputil_spark.operators.chunk import chunk_documents
     from deduputil_spark.operators.verify import bsim_components
 
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("conv_id"), F.col("text").alias("doc_text")
     )
-    chunks = chunk_fsp_sql(docs, FSP_BS)
+    chunks = chunk_documents(docs, FSP_CFG)
     pairs = q_lsh_candidates(spark, sf_dir).select(
         F.col("doc_a").alias("conv_a"), F.col("doc_b").alias("conv_b")
     )
@@ -352,13 +356,13 @@ def q_lcs_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     backtrack-path-independent — which makes an exact SQL oracle possible via a
     longest-chain recursive CTE (the general weighted case is pytest-gated
     against the scalar transliteration instead)."""
-    from deduputil_spark.operators.chunk import chunk_fsp_sql
+    from deduputil_spark.operators.chunk import chunk_documents
     from deduputil_spark.operators.verify import lcs_verify_components, pair_chunk_sequences
 
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("conv_id"), F.col("text").alias("doc_text")
     )
-    chunks = chunk_fsp_sql(docs, FSP_BS).withColumnRenamed("chunk_text", "chunk_bytes")
+    chunks = chunk_documents(docs, FSP_CFG)
     pairs = q_lsh_candidates(spark, sf_dir).select(
         F.col("doc_a").alias("conv_a"), F.col("doc_b").alias("conv_b")
     )
@@ -990,7 +994,7 @@ FROM documents d LEFT JOIN cleaned c USING (doc_id)
 
 
 # ---------------------------------------------------------------------------
-# Rows-only entries (non-SQL-expressible: pandas-UDF CDC, full pipeline)
+# Fixture-oracled entries (not SQL-expressible: CDC cuts, full pipeline)
 # ---------------------------------------------------------------------------
 
 def _synth_transcripts(spark: SparkSession):
@@ -1002,8 +1006,8 @@ def _synth_transcripts(spark: SparkSession):
 
 
 def q_cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC chunker (mapInPandas) stats per conversation — rows-only check;
-    byte-exactness is pytest-golden-tested against the reference walk."""
+    """CDC chunker (Arrow-batch cut walk) stats per conversation, oracled
+    by a golden fixture built from the byte-at-a-time reference walk."""
     from deduputil_spark.operators.assemble import assemble_documents
     from deduputil_spark.operators.chunk import chunk_documents
 
@@ -1017,7 +1021,8 @@ def q_cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_transcript_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full transcript near-dup pipeline (rows-only; recall gated in pytest)."""
+    """Full transcript near-dup pipeline, oracled by a golden fixture
+    (all-pairs Jaccard + union-find); recall is also gated in pytest."""
     from deduputil_spark.plans.pipeline import run_pipeline_lean
 
     t = _synth_transcripts(spark)
@@ -1026,7 +1031,7 @@ def q_transcript_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_roundtrip_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 round-trip, HARD-oracled: FSP-chunk documents.parquet through the
-    REAL binary path (mapInPandas cut walk → block store → file_meta →
+    REAL binary path (Arrow-batch cut walk → block store → file_meta →
     reconstruct, the Spark analog of dedup_package_extract,
     /root/reference/src/dedup.c:1726-1812), then emit the md5 + length of the
     RECONSTRUCTED text.  The DuckDB oracle computes md5/length of the SOURCE
@@ -1039,8 +1044,7 @@ def q_roundtrip_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("conv_id"), F.col("text").alias("doc_text")
     )
-    cfg = DedupConfig(chunk_algo="fsp", block_size=FSP_BS)
-    chunks = chunk_documents(docs, cfg)
+    chunks = chunk_documents(docs, FSP_CFG)
     blocks = build_block_store(chunks)
     meta = build_file_meta(chunks, blocks)
     recon = reconstruct_documents(meta, blocks)

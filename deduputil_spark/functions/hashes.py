@@ -23,7 +23,9 @@ Two implementations of the CDC cut walk live here:
   fresh/rolling distinction telescopes away — and since block_size (4096)
   divides 2^16, `hkey % 4096 == (s1 mod 4096)`.  The cut-candidate mask is
   therefore a sliding-window sum, computable for ALL positions at once; only
-  the min/max/skip walk is sequential and it is O(number of cuts).
+  the min/max/skip walk is sequential and it is O(number of cuts).  That walk
+  is `cdc_walk_matches`, which the Arrow-batch chunker
+  (operators/chunk.py) calls too, off its own per-document cumsum.
 """
 
 from __future__ import annotations
@@ -555,8 +557,23 @@ def cdc_cuts_fast(
             for h in bad:
                 stop = data.find(b"\x00", h, h + win)
                 match[h] = scalar(data[h:stop]) % block_size == cdc_r
-    match_pos = np.flatnonzero(match)  # window head positions that would cut
+    return cdc_walk_matches(np.flatnonzero(match), n, min_size, max_size, win)
+
+
+def cdc_walk_matches(
+    match_pos: np.ndarray, n: int, min_size: int, max_size: int, win: int
+) -> list[int]:
+    """The CDC min/max/skip walk over precomputed cut candidates: given the
+    sorted window heads whose hash satisfies the cut condition, return the
+    block END offsets `cdc_cuts_ref` would emit for an `n`-byte document.
+
+    Each block skips its first `min_size - win` heads unhashed, cuts after
+    the first matching window, and is forced at `max_size` when every head
+    up to there was evaluated without a match; windows running out mid-block
+    leave the rest as the tail (deduputil src/dedup.c:429-436,490,517-525).
+    """
     cuts: list[int] = []
+    nm = len(match_pos)
     p = 0
     last_head = n - win  # last evaluable window head
     while True:
@@ -564,8 +581,8 @@ def cdc_cuts_fast(
         if h0 + win > n:
             break
         hi_cap = p + max_size - 1  # last head before forced max cut
-        j = np.searchsorted(match_pos, h0)
-        if j < len(match_pos) and match_pos[j] <= min(hi_cap, last_head):
+        j = int(np.searchsorted(match_pos, h0))
+        if j < nm and match_pos[j] <= min(hi_cap, last_head):
             cut = int(match_pos[j]) + win
         elif hi_cap <= last_head:
             cut = p + max_size  # every head evaluated, none matched

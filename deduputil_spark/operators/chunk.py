@@ -1,20 +1,15 @@
-"""C1/C2 — chunking: 1 document row in, N chunk rows out.
+"""C1/C2/C3 — chunking: 1 document row in, N chunk rows out.
 
-Two paths:
-
-- `chunk_documents` — the real thing: byte-exact FSP/CDC chunking via
-  `mapInPandas` with the golden-validated numpy cut walk
-  (deduputil_spark.functions.hashes; validated cut-for-cut against the
-  compiled reference binary — /root/reference/src/dedup.c:402-546,716-764).
-  Emits BinaryType chunks (the reference chunks bytes, and UTF-8 slicing at
-  byte offsets may split code points).  MD5 is computed JVM-side afterwards
-  (`F.md5` on binary — identical 32-hex output to the reference's
-  md5_2_str, /root/reference/src/dedup.c:148-161), keeping Python work to the
-  cut walk + adler only.
-
-- `chunk_fsp_sql` — a pure-SQL FSP variant (character-stride substring),
-  entirely JVM/codegen-side, used as the DuckDB-oracle query shape and as a
-  fast path for ASCII corpora.
+`chunk_documents` is the one chunker: byte-exact FSP/CDC/SB chunking in a
+`mapInArrow` UDF that walks whole Arrow batches (`make_arrow_chunker`), with
+the cut walks of deduputil_spark.functions.hashes (validated cut-for-cut
+against the compiled deduputil binary — src/dedup.c:402-546, 551-711,
+716-764).  Packages, the incremental stream and the FSP queries of
+__spark_entry__.py all run it.  Emits BinaryType chunks (the reference chunks
+bytes, and UTF-8 slicing at byte offsets may split code points).  MD5 is
+computed JVM-side afterwards (`F.md5` on binary — identical 32-hex output to
+the reference's md5_2_str, src/dedup.c:148-161), keeping Python work to the
+cut walk + adler only.
 
 Scale notes: the chunker is embarrassingly parallel (per-document), no
 shuffle; Arrow batch size bounds UDF memory.  Chunk rows carry
@@ -23,22 +18,16 @@ shuffle; Arrow batch size bounds UDF memory.  Chunk rows carry
 
 from __future__ import annotations
 
-import hashlib
 import zlib
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
+import pandas as pd  # module-level: pandas_udf resolves `_zc`'s string hints here
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deduputil_spark.config import DedupConfig
-from deduputil_spark.functions.hashes import cdc_cuts_fast, fsp_cuts, sb_spans
-
-if TYPE_CHECKING:
-    pass
+from deduputil_spark.functions.hashes import cdc_cuts_fast, cdc_walk_matches, sb_spans
 
 CHUNK_SCHEMA = T.StructType(
     [
@@ -50,70 +39,6 @@ CHUNK_SCHEMA = T.StructType(
         T.StructField("is_tail", T.BooleanType(), False),
     ]
 )
-
-
-def _adler32_np(data: bytes) -> int:
-    """Reference weak checksum (/root/reference/src/checksum.c:7-24), signed chars."""
-    if not data:
-        return 0
-    a = np.frombuffer(data, dtype=np.int8).astype(np.int64)
-    s1 = int(a.sum())
-    s2 = int((a * np.arange(len(a), 0, -1)).sum())
-    return ((s1 & 0xFFFF) + ((s2 << 16) & 0xFFFFFFFF)) & 0xFFFFFFFF
-
-
-def _chunk_one(cid: str, data: bytes, cfg: DedupConfig) -> Iterator[tuple]:
-    if cfg.chunk_algo == "fsp":
-        cuts = fsp_cuts(len(data), cfg.block_size)
-    elif cfg.chunk_algo == "sb":
-        # per-DOCUMENT state: the reference's SB tables are cross-file and
-        # scan-order-dependent (dedup.c:551-711), which no parallel engine can
-        # reproduce deterministically; per-doc state keeps boundaries a pure
-        # function of the document (cross-doc dedup still happens exactly in
-        # the (md5, bytes) block store).  sb_spans(state=...) carries the
-        # sequential semantics for the golden oracle.
-        spans, _tail_start = sb_spans(data, cfg.block_size)
-        cuts = [e for _, e in spans]
-    else:
-        cuts = cdc_cuts_fast(
-            data,
-            block_size=cfg.block_size,
-            min_size=cfg.block_min_size,
-            max_size=cfg.block_max_size,
-            win=cfg.block_win_size,
-            cdc_r=cfg.cdc_r,
-            cut_hash=cfg.cut_hash,
-        )
-    prev = 0
-    idx = 0
-    for end in cuts:
-        piece = data[prev:end]
-        yield (cid, idx, piece, len(piece), _adler32_np(piece), False)
-        prev = end
-        idx += 1
-    tail = data[prev:]
-    # the tail row is ALWAYS emitted (possibly empty) so reconstruction and
-    # per-doc accounting never lose a document with zero chunks
-    yield (cid, idx, tail, len(tail), _adler32_np(tail), True)
-
-
-def make_chunker(cfg: DedupConfig, text_col: str = "doc_text"):
-    """mapInPandas function: docs(conv_id, doc_text, ...) -> CHUNK_SCHEMA rows.
-
-    Kept as the readable scalar-walk form (tests diff it against the Arrow
-    path); production `chunk_documents` uses `make_arrow_chunker`."""
-
-    def chunker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for cid, text in zip(pdf["conv_id"], pdf[text_col]):
-                data = text.encode("utf-8") if isinstance(text, str) else bytes(text)
-                rows.extend(_chunk_one(cid, data, cfg))
-            yield pd.DataFrame(
-                rows, columns=["conv_id", "chunk_idx", "chunk_bytes", "chunk_len", "weak32", "is_tail"]
-            )
-
-    return chunker
 
 
 def _batch_chunk_walk(
@@ -164,30 +89,19 @@ def _batch_chunk_walk(
         if cfg.chunk_algo == "fsp":
             cuts = np.arange(bs, nd + 1, bs, dtype=np.int64)
         elif cfg.chunk_algo == "sb":
+            # per-DOCUMENT state: the reference's SB tables are cross-file and
+            # scan-order-dependent (dedup.c:551-711), which no parallel engine
+            # can reproduce deterministically; per-doc state keeps boundaries
+            # a pure function of the document (cross-doc dedup still happens
+            # exactly in the (md5, bytes) block store).  sb_spans(state=...)
+            # carries the sequential semantics for the golden oracle.
             spans, _tail_start = sb_spans(bytes(sub), bs)
             cuts = np.asarray([e for _, e in spans], dtype=np.int64)
         elif adler_fast:
             lc: list[int] = []
             if nd >= win:
                 wsum = c1[win:] - c1[:-win]  # window sums off the shared cumsum
-                match_pos = np.flatnonzero((wsum & (bs - 1)) == r)
-                nm = len(match_pos)
-                p = 0
-                last_head = nd - win
-                while True:
-                    h0 = p + (mn - win)
-                    if h0 + win > nd:
-                        break
-                    hi_cap = p + mx - 1
-                    j = int(np.searchsorted(match_pos, h0))
-                    if j < nm and match_pos[j] <= min(hi_cap, last_head):
-                        cut = int(match_pos[j]) + win
-                    elif hi_cap <= last_head:
-                        cut = p + mx  # every head evaluated, none matched
-                    else:
-                        break  # windows ran out mid-block -> tail
-                    lc.append(cut)
-                    p = cut
+                lc = cdc_walk_matches(np.flatnonzero((wsum & (bs - 1)) == r), nd, mn, mx, win)
             cuts = np.asarray(lc, dtype=np.int64)
         else:
             cuts = np.asarray(
@@ -292,56 +206,6 @@ def chunk_documents(docs: DataFrame, cfg: DedupConfig | None = None) -> DataFram
     return chunks.withColumn("md5", F.md5(F.col("chunk_bytes")))
 
 
-def chunk_fsp_sql(docs: DataFrame, block_size: int = 4096) -> DataFrame:
-    """Pure-SQL fixed-stride chunking over characters (JVM/codegen, no Python).
-
-    Semantics: full blocks of `block_size` chars; the `length % block_size`
-    remainder is the raw tail (is_tail = true), mirroring
-    /root/reference/src/dedup.c:758-759 at character granularity.
-    """
-    bs = int(block_size)
-    full = docs.select(
-        "conv_id",
-        F.posexplode(
-            F.expr(
-                f"CASE WHEN length(doc_text) >= {bs} THEN "
-                f"transform(sequence(0, cast(floor(length(doc_text)/{bs}) as int) - 1), "
-                f"i -> substring(doc_text, i*{bs}+1, {bs})) "
-                f"ELSE array() END"
-            )
-        ).alias("chunk_idx", "chunk_text"),
-    ).select(
-        "conv_id",
-        F.col("chunk_idx").cast("int").alias("chunk_idx"),
-        "chunk_text",
-        F.length("chunk_text").cast("int").alias("chunk_len"),
-        F.lit(False).alias("is_tail"),
-    )
-    n_full = F.expr(f"cast(floor(length(doc_text)/{bs}) as int)")
-    tail = docs.select(
-        "conv_id",
-        n_full.alias("chunk_idx"),
-        F.expr(f"substring(doc_text, cast(floor(length(doc_text)/{bs}) as bigint)*{bs}+1)").alias("chunk_text"),
-        F.expr(f"cast(length(doc_text) - floor(length(doc_text)/{bs})*{bs} as int)").alias("chunk_len"),
-        F.lit(True).alias("is_tail"),
-    )
-    return full.unionByName(tail).withColumn("md5", F.md5(F.col("chunk_text")))
-
-
-def reference_chunk_counts(texts: list[str], cfg: DedupConfig) -> dict[str, int]:
-    """Driver-side oracle helper for tests: chunk counts via the pure walk."""
-    out = {}
-    for i, t in enumerate(texts):
-        data = t.encode("utf-8")
-        if cfg.chunk_algo == "fsp":
-            out[str(i)] = len(fsp_cuts(len(data), cfg.block_size))
-        else:
-            out[str(i)] = len(cdc_cuts_fast(data, cfg.block_size, cfg.block_min_size,
-                                            cfg.block_max_size, cfg.block_win_size,
-                                            cfg.cdc_r, cfg.cut_hash))
-    return out
-
-
 def compress_chunk_blocks(chunks: DataFrame, level: int = 6) -> DataFrame:
     """F4 full `-z` semantics: zlib each NON-TAIL chunk and REKEY the store on
     the compressed bytes — md5(zlib(chunk)), chunk_len = compressed length —
@@ -358,7 +222,6 @@ def compress_chunk_blocks(chunks: DataFrame, level: int = 6) -> DataFrame:
 
     SCALE: per-block Python (Arrow-batched pandas UDF) on the chunk map side —
     narrow, no extra shuffle; the md5/length rekey stays JVM-side."""
-    import pandas as pd
 
     @F.pandas_udf("binary")
     def _zc(s: pd.Series) -> pd.Series:
@@ -375,18 +238,3 @@ def compress_chunk_blocks(chunks: DataFrame, level: int = 6) -> DataFrame:
         )
         .withColumn("md5", F.when(keep_tail, F.col("md5")).otherwise(F.md5("chunk_bytes")))
     )
-
-
-def zlib_block(data: bytes, level: int = 6) -> bytes:
-    """F4 scalar helper — per-block zlib, byte-identical to the reference's
-    zlib_compress_block (/root/reference/src/libz.c:270, same system libz at
-    Z_DEFAULT_COMPRESSION).  The full `-z` semantics — compress → md5 → dedup,
-    i.e. the store IS keyed on md5(zlib(chunk)) exactly as the reference does
-    it — live in `compress_chunk_blocks` above (golden byte-exact vs a
-    binary-built `-z` package in tests/test_cut_hash_golden.py)."""
-    return zlib.compress(data, level)
-
-
-def md5_hex(data: bytes) -> str:
-    """Python-side MD5 (matches Spark F.md5 and the reference md5_2_str)."""
-    return hashlib.md5(data).hexdigest()

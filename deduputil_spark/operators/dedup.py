@@ -67,7 +67,7 @@ def assign_dense_ids(
     )
 
 
-def build_block_store(chunks: DataFrame, scalable_ids: bool = True) -> DataFrame:
+def build_block_store(chunks: DataFrame) -> DataFrame:
     """chunks (non-tail) -> blocks(bid, md5, chunk_bytes, chunk_len, weak32, refcount).
 
     One hash-aggregate shuffle (Catalyst partial+final) + the id pass.
@@ -78,10 +78,7 @@ def build_block_store(chunks: DataFrame, scalable_ids: bool = True) -> DataFrame
         F.first("weak32").alias("weak32"),
         F.count(F.lit(1)).alias("refcount"),
     )
-    if scalable_ids:
-        return assign_dense_ids(distinct, ["md5", "chunk_bytes"], "bid")
-    w = Window.orderBy("md5", "chunk_bytes")
-    return distinct.withColumn("bid", (F.row_number().over(w) - 1).cast("long"))
+    return assign_dense_ids(distinct, ["md5", "chunk_bytes"], "bid")
 
 
 def build_file_meta(chunks: DataFrame, blocks: DataFrame) -> DataFrame:

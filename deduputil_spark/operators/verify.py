@@ -2,12 +2,13 @@
 
 Three verifiers, mirroring the reference's similarity semantics:
 
-- `jaccard_verify` — exact set Jaccard over shingles, relational (join on
-  shingle equality + set-size aggregate).  This is the pipeline gate.
+- `jaccard_verify_docs` — exact set Jaccard over k-gram hash sets, one array
+  row per candidate doc and a JVM `array_intersect` per pair.  This is the
+  pipeline gate.
 - `bsim_similarity` — the reference's weighted block-frequency formula
   sim = 2·Σ len·min(n1,n2) / Σ len·(n1+n2)  (/root/reference/src/bsim.c:277-294)
   over chunk-md5 multisets, relational.
-- `lcs_similarity` — the reference's ordered LCS similarity
+- `lcs_verify` — the reference's ordered LCS similarity
   (/root/reference/src/bsim.c:177-275): O(n·m) DP over the two documents'
   chunk-hash sequences, run ONLY on surviving candidate pairs via a
   vectorized-batch pandas UDF (quadratic work must never touch the corpus).
@@ -107,64 +108,6 @@ def jaccard_verify_docs(
             "conv_a",
             "conv_b",
             (F.col("inter") / (F.col("nsum") - F.col("inter"))).alias("jaccard"),
-        )
-    )
-    if threshold is not None:
-        out = out.filter(F.col("jaccard") >= threshold)
-    return out
-
-
-def jaccard_verify(
-    pairs: DataFrame, shingle_df: DataFrame, threshold: float | None = None
-) -> DataFrame:
-    """(conv_a, conv_b) × (conv_id, shingle) -> (conv_a, conv_b, jaccard).
-
-    |A∩B| via join on shingle; |A∪B| = |A|+|B|-|A∩B|.  Filter at `threshold`.
-
-    SCALE: the shingle table is first SEMI-PRUNED to convs that appear in a
-    candidate pair (semi-join — pairs are small next to the corpus, AQE
-    broadcasts when they fit), and only then deduplicated.  Verification cost therefore scales with the
-    candidate set, never with the corpus.  `shingle_df` may be the raw
-    (non-distinct) narrow shingle map.
-    """
-    members = (
-        pairs.select(F.col("conv_a").alias("conv_id"))
-        .unionByName(pairs.select(F.col("conv_b").alias("conv_id")))
-    )  # no .distinct(): the LEFT SEMI below dedups by construction
-    # persist: pruned feeds sizes + both join sides; without it the prune +
-    # distinct shuffle re-executes three times.  Shingles are reduced to
-    # 64-bit xxhash keys first — the distinct + equi-joins then shuffle longs
-    # instead of ~50-char strings (collision odds 2^-64·|set|² are negligible
-    # for set-size arithmetic).
-    # semi-prune without a forced broadcast (unbounded cardinality; AQE decides)
-    pruned = track(
-        shingle_df.join(members, "conv_id", "left_semi")
-        .select("conv_id", F.xxhash64("shingle").alias("shingle"))
-        .distinct()
-    )
-    return _jaccard_on_sets(pairs, pruned, threshold)
-
-
-def _jaccard_on_sets(pairs: DataFrame, pruned: DataFrame, threshold: float | None) -> DataFrame:
-    """Shared core: (conv_id, shingle) DISTINCT sets -> pair Jaccard."""
-    sizes = pruned.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n"))
-    sa = pruned.select(F.col("conv_id").alias("conv_a"), "shingle")
-    sb = pruned.select(F.col("conv_id").alias("conv_b"), "shingle")
-    inter = (
-        pairs.join(sa, "conv_a")
-        .join(sb, ["conv_b", "shingle"])
-        .groupBy("conv_a", "conv_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        pairs.join(inter, ["conv_a", "conv_b"], "left")
-        .fillna(0, subset=["inter"])
-        .join(sizes.select(F.col("conv_id").alias("conv_a"), F.col("n").alias("na")), "conv_a")
-        .join(sizes.select(F.col("conv_id").alias("conv_b"), F.col("n").alias("nb")), "conv_b")
-        .select(
-            "conv_a",
-            "conv_b",
-            (F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))).alias("jaccard"),
         )
     )
     if threshold is not None:

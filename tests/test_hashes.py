@@ -22,6 +22,7 @@ from deduputil_spark.functions.hashes import (
     fsp_cuts,
     rabin_hash32,
     rabin_window_hashes,
+    sb_spans,
 )
 
 rng = random.Random(1234)
@@ -153,12 +154,15 @@ def test_cdc_new_cut_hashes_fast_matches_ref(fn):
 
 
 # ---------------------------------------------------------------------------
-# Arrow batch chunker parity: _batch_chunk_ends + prefix-sum adler must equal
-# the scalar per-doc walk (_chunk_one) for every algo on mixed-shape batches.
+# Arrow batch chunker parity: _batch_chunk_walk must tile every doc into the
+# chunks the reference walks cut (cdc_cuts_ref / fsp_cuts / sb_spans), each
+# carrying the reference adler (adler32_checksum), on mixed-shape batches.
 # ---------------------------------------------------------------------------
 
 def _docs_corpus():
-    # empty doc, sub-min doc, exact block, multi-byte utf8, big random, NULs
+    # empty doc, sub-min doc, exact block, multi-byte utf8, big random, NULs,
+    # and a constant-byte doc: its window sum (48) never meets the cut
+    # residue, so every CDC block runs to the forced max-size cut
     return [
         b"",
         b"tiny",
@@ -167,7 +171,19 @@ def _docs_corpus():
         bytes(rng.randrange(256) for _ in range(50000)),
         bytes(rng.randrange(256) for _ in range(4000)) + b"\x00\x00" + bytes(rng.randrange(256) for _ in range(4000)),
         bytes(rng.randrange(256) for _ in range(4096)),
+        b"\x01" * 40000,
     ]
+
+
+def _reference_cuts(data: bytes, cfg: DedupConfig) -> list[int]:
+    if cfg.chunk_algo == "fsp":
+        return fsp_cuts(len(data), cfg.block_size)
+    if cfg.chunk_algo == "sb":
+        return [e for _, e in sb_spans(data, cfg.block_size)[0]]
+    return cdc_cuts_ref(
+        data, cfg.block_size, cfg.block_min_size, cfg.block_max_size,
+        cfg.block_win_size, cfg.cdc_r, cfg.cut_hash,
+    )
 
 
 @pytest.mark.parametrize(
@@ -182,7 +198,7 @@ def _docs_corpus():
     ids=["cdc-adler", "fsp", "sb", "cdc-rabin", "cdc-adler-nonpow2"],
 )
 def test_arrow_batch_chunker_matches_scalar_walk(cfg):
-    from deduputil_spark.operators.chunk import _batch_chunk_walk, _chunk_one
+    from deduputil_spark.operators.chunk import _batch_chunk_walk
 
     docs = _docs_corpus()
     bounds = np.zeros(len(docs) + 1, dtype=np.int64)
@@ -192,13 +208,13 @@ def test_arrow_batch_chunker_matches_scalar_walk(cfg):
     offsets = np.concatenate(([0], ends))
     pos = 0
     for i, d in enumerate(docs):
-        expected = list(_chunk_one(str(i), d, cfg))
-        got_n = int(counts[i])
-        assert got_n == len(expected), (i, got_n, len(expected))
-        for j, (cid, cidx, piece, plen, wk, is_tail) in enumerate(expected):
+        cuts = _reference_cuts(d, cfg)
+        spans = list(zip([0, *cuts], [*cuts, len(d)]))  # blocks, then the tail
+        assert int(counts[i]) == len(spans), (i, int(counts[i]), len(spans))
+        for j, (s, e) in enumerate(spans):
             st, en = int(offsets[pos]), int(offsets[pos + 1])
-            assert buf[st:en].tobytes() == piece, (i, j)
+            assert buf[st:en].tobytes() == d[s:e], (i, j)
+            wk = adler32_checksum(d[s:e])
             assert int(weak[pos]) == wk, (i, j, int(weak[pos]), wk)
-            assert is_tail == (j == len(expected) - 1)
             pos += 1
     assert pos == len(ends)

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from deduputil_spark.config import DedupConfig
 from deduputil_spark.operators.assemble import assemble_documents, validate_assembly
-from deduputil_spark.operators.chunk import chunk_documents, chunk_fsp_sql
+from deduputil_spark.operators.chunk import chunk_documents
 from deduputil_spark.operators.dedup import (
     append_documents,
     build_block_store,
@@ -120,23 +120,6 @@ def test_append_documents(spark, transcripts, pipeline):
     assert old_max == pipeline["blocks"].agg(F.max("bid")).collect()[0][0]
 
 
-def test_fsp_sql_matches_pandas_fsp_on_ascii(spark, pipeline):
-    """Char-stride SQL FSP == byte FSP on ASCII corpora (chunk counts + hashes)."""
-    if pipeline["cfg"].chunk_algo != "fsp":
-        pytest.skip("fsp only")
-    docs = pipeline["docs"]
-    sql_chunks = chunk_fsp_sql(docs)
-    a = (
-        pipeline["chunks"].filter(~F.col("is_tail"))
-        .select("conv_id", "chunk_idx", F.md5(F.col("chunk_bytes")).alias("h"))
-    )
-    b = (
-        sql_chunks.filter(~F.col("is_tail"))
-        .select("conv_id", "chunk_idx", F.md5(F.col("chunk_text").cast("binary")).alias("h"))
-    )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_sb_chunk_algo_roundtrip(spark, transcripts):
     """chunk_algo='sb' (C3 as a package-creation mode): chunks tile each doc,
     round-trip is exact, and a self-repetitive doc actually dedups."""
@@ -177,16 +160,16 @@ def test_sb_spans_self_dedup():
 
 
 def test_zlib_divergence_md5_is_over_uncompressed_bytes(spark, transcripts):
-    """F4 divergence pin (VERDICT r2 item 7): the reference's -z compresses a
+    """Default keying pin (VERDICT r2 item 7): the reference's -z compresses a
     block BEFORE hashing (/root/reference/src/dedup.c:462-473), so its md5 is
-    over COMPRESSED bytes; ours is always over the UNCOMPRESSED block (parquet
-    owns storage compression).  Pin both halves: (a) compressed-storage still
-    round-trips, (b) our md5 equals md5(raw) and differs from md5(zlib(raw))
-    — i.e. a -z package from the binary is NOT block-compatible, by design."""
+    over COMPRESSED bytes.  With the default `compress_blocks=False` our md5
+    is over the UNCOMPRESSED block (parquet owns storage compression).  Pin
+    both halves: (a) a zlib'd block still round-trips, (b) the default md5
+    equals md5(raw) and differs from md5(zlib(raw)).  `-z` keying is the
+    opt-in `compress_blocks=True` mode, pinned by
+    test_compressed_package_roundtrip_and_z_semantics."""
     import hashlib
     import zlib
-
-    from deduputil_spark.operators.chunk import chunk_documents, zlib_block
 
     cfg = DedupConfig(block_size=256, block_min_size=64, block_max_size=1024)
     docs = assemble_documents(transcripts)
@@ -194,7 +177,7 @@ def test_zlib_divergence_md5_is_over_uncompressed_bytes(spark, transcripts):
     assert chunks
     for r in chunks:
         raw = bytes(r["chunk_bytes"])
-        comp = zlib_block(raw)
+        comp = zlib.compress(raw, 6)
         # (a) compressed storage round-trips byte-exactly
         assert zlib.decompress(comp) == raw
         # (b) our md5 column is the hash of the RAW bytes...
