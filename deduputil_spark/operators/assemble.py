@@ -6,10 +6,12 @@ ordered by `turn_idx` joined with a separator.  One hash-aggregate shuffle,
 fully JVM-side (collect_list + array_sort of (turn_idx, text) structs —
 partial aggregation applies, so map-side combine happens before the exchange).
 
-Contract: `(conv_id, turn_idx)` is unique (input_hint) and `sep` must not
-occur in turn text (the reconstruction round-trip re-splits on it; mirrors the
-reference keeping the raw tail so extraction is exact,
-/root/reference/src/dedup.c:842,851).
+Contract: `(conv_id, turn_idx)` is unique (input_hint).  The document bytes
+always round-trip exactly (the reference keeps the raw tail so extraction is
+exact, reference src/dedup.c:842,851), but per-turn extraction re-splits
+on `sep`, so it needs `sep` absent from turn text.  `package.extract_turns`
+enforces that: it raises on a document whose piece count differs from its turn
+count.  `validate_assembly` checks the input up front.
 """
 
 from __future__ import annotations

@@ -65,6 +65,8 @@ def create_package(
     meta = track(meta)
     blocks.write.mode("overwrite").parquet(_p(pkg_dir, "blocks"))
     meta.write.mode("overwrite").parquet(_p(pkg_dir, "file_meta"))
+    # the manifest is written LAST: a crash mid-create leaves no manifest, so
+    # `has_package` is false and a retry simply creates the package again
     st = dedup_stats(blocks, meta)
     manifest = spark.createDataFrame(
         [(cfg.block_size, st.unique_blocks, int(meta.count()), MAGIC, cfg.config_hash(),
@@ -77,26 +79,35 @@ def create_package(
     return st
 
 
-def open_package(spark: SparkSession, pkg_dir: str) -> dict[str, DataFrame]:
+def has_package(pkg_dir: str) -> bool:
+    """Whether `pkg_dir` holds a committed package, after crash recovery."""
+    _recover(pkg_dir)
+    return os.path.exists(_p(pkg_dir, "manifest"))
+
+
+def open_package(spark: SparkSession, pkg_dir: str) -> dict:
+    """The package's tables, plus `header`: the one manifest row, collected
+    once here for the magic check, `_pkg_z`, the append guard and `_rewrite`."""
     _recover(pkg_dir)
     manifest = spark.read.parquet(_p(pkg_dir, "manifest"))
-    if manifest.collect()[0]["magic_num"] != MAGIC:
+    header = manifest.collect()[0]
+    if header["magic_num"] != MAGIC:
         raise ValueError("not a dedup package (bad magic)")
     return {
         "manifest": manifest,
+        "header": header,
         "blocks": spark.read.parquet(_p(pkg_dir, "blocks")),
         "file_meta": spark.read.parquet(_p(pkg_dir, "file_meta")),
     }
 
 
-def _pkg_z(pkg: dict[str, DataFrame]) -> bool:
+def _pkg_z(pkg: dict) -> bool:
     """Whether the package stores zlib-compressed blocks (the reference's
     header block_z field, /root/reference/src/dedup.h:64; like the binary,
     the PACKAGE header — not the caller's flags — governs extract and append,
     /root/reference/src/dedup.c:938,1783).  Packages written before this
     field existed have no column and read as uncompressed."""
-    m = pkg["manifest"]
-    return "block_z" in m.columns and bool(m.collect()[0]["block_z"])
+    return bool(pkg["header"].asDict().get("block_z"))
 
 
 def list_package(spark: SparkSession, pkg_dir: str) -> DataFrame:
@@ -124,7 +135,10 @@ def extract_turns(spark: SparkSession, pkg_dir: str, sep: str = DOC_SEP) -> Data
 
     Requires the package to have been created from a transcript table carrying
     TURN_META_COLS; raises otherwise (text-only packages extract via
-    `extract_package`)."""
+    `extract_package`).  Turns are recovered by re-splitting the document on
+    `sep`, so a document whose turn text contains `sep` cannot be split back:
+    the query raises on it (USER_RAISED_EXCEPTION) rather than shift text
+    against its metadata.  `extract_package` still returns its bytes exactly."""
     pkg = open_package(spark, pkg_dir)
     meta_cols = {"roles", "tools", "tss"}
     if not meta_cols.issubset(pkg["file_meta"].columns):
@@ -134,12 +148,21 @@ def extract_turns(spark: SparkSession, pkg_dir: str, sep: str = DOC_SEP) -> Data
         )
     recon = reconstruct_documents(pkg["file_meta"], pkg["blocks"], compressed=_pkg_z(pkg))
     joined = recon.join(pkg["file_meta"].select("conv_id", "roles", "tools", "tss"), "conv_id")
+    # a turn containing `sep` splits into extra pieces, so the piece count
+    # differs from the turn count exactly when some turn contains it
+    pieces = F.split("doc_text", sep)
+    texts = F.when(
+        F.col("roles").isNotNull() & (F.size(pieces) != F.size("roles")),
+        F.raise_error(F.concat(
+            F.lit("extract_turns: a turn of conv_id "), F.col("conv_id"),
+            F.lit(f" contains the separator {sep!r}; extract_package returns the document"),
+        )),
+    ).otherwise(pieces)
     # a metadata-less document (e.g. text-only rows appended later via
     # append_documents' allowMissingColumns union) has NULL metadata arrays;
     # arrays_zip(…, NULL) is NULL and posexplode would silently DROP the whole
     # document — coalesce each array to all-nulls sized by the split instead
     # (ADVICE r3)
-    texts = F.split("doc_text", sep)
     null_sized = lambda typ: F.transform(texts, lambda x: F.lit(None).cast(typ))  # noqa: E731
     z = F.posexplode(
         F.arrays_zip(
@@ -165,20 +188,28 @@ def append_package(
     """dedup -a: dedup new conversations against the existing store."""
     cfg = cfg or DedupConfig()
     pkg = open_package(spark, pkg_dir)
+    hdr = pkg["header"]
+    # the package's chunking governs: new documents chunked differently would
+    # share no blocks with the old ones, and the manifest would misdescribe them
+    if (cfg.chunk_algo, cfg.block_size) != (hdr["chunk_algo"], hdr["block_size"]):
+        raise ValueError(
+            f"append_package: cfg chunks with ({cfg.chunk_algo}, {cfg.block_size}) but the "
+            f"package was created with ({hdr['chunk_algo']}, {hdr['block_size']})"
+        )
     new = transcripts.join(pkg["file_meta"].select("conv_id"), "conv_id", "left_anti")
     chunks = chunk_documents(assemble_documents(new), cfg)
     if _pkg_z(pkg):  # the package header governs, as in the binary (dedup.c:938)
         chunks = compress_chunk_blocks(chunks)
     extra = turn_metadata(new) if set(TURN_META_COLS).issubset(new.columns) else None
     nb, nm = append_documents(pkg["blocks"], pkg["file_meta"], chunks, new_extra=extra)
-    _rewrite(spark, pkg_dir, nb, nm)
+    _rewrite(spark, pkg, pkg_dir, nb, nm)
 
 
 def remove_from_package(spark: SparkSession, conv_ids: DataFrame, pkg_dir: str) -> None:
     """dedup -r: drop documents, drop zero-ref blocks, renumber densely."""
     pkg = open_package(spark, pkg_dir)
     nb, nm = remove_documents(pkg["blocks"], pkg["file_meta"], conv_ids)
-    _rewrite(spark, pkg_dir, nb, nm)
+    _rewrite(spark, pkg, pkg_dir, nb, nm)
 
 
 #: tables replaced as ONE unit by _rewrite: all three swap together or the
@@ -187,7 +218,9 @@ def remove_from_package(spark: SparkSession, conv_ids: DataFrame, pkg_dir: str) 
 _SWAP_TABLES = ("blocks", "file_meta", "manifest")
 
 
-def _rewrite(spark: SparkSession, pkg_dir: str, blocks: DataFrame, meta: DataFrame) -> None:
+def _rewrite(
+    spark: SparkSession, pkg: dict, pkg_dir: str, blocks: DataFrame, meta: DataFrame
+) -> None:
     """Stage-then-rename (parquet can't overwrite its own input mid-plan).
 
     Every replaced table — INCLUDING the refreshed manifest — is fully
@@ -201,11 +234,10 @@ def _rewrite(spark: SparkSession, pkg_dir: str, blocks: DataFrame, meta: DataFra
     # refresh every derived header field (counts AND byte totals — the
     # reference recomputes its header on rewrite, dedup.c:1162-1189) FROM THE
     # STAGED tables, so the new manifest swaps in atomically with them; the
-    # original manifest DataFrame schema is reused so column types never
-    # drift across rewrites (int stays int, no inference from Python values)
-    mdf = spark.read.parquet(_p(pkg_dir, "manifest"))
-    schema = mdf.schema
-    manifest = mdf.collect()[0].asDict()
+    # original manifest schema is reused so column types never drift across
+    # rewrites (int stays int, no inference from Python values)
+    schema = pkg["manifest"].schema
+    manifest = pkg["header"].asDict()
     b = spark.read.parquet(_p(pkg_dir, "blocks_tmp"))
     m = spark.read.parquet(_p(pkg_dir, "file_meta_tmp"))
     st = dedup_stats(b, m)

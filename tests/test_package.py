@@ -215,3 +215,50 @@ def test_crash_recovery_roll_forward_and_back(spark, transcripts, tmp_path_facto
     assert pkg["file_meta"].count() == n_before
     assert not os.path.exists(_p(d, "blocks") + "_tmp")
     assert roundtrip_mismatches(transcripts, extract_package(spark, d)).count() == 0
+
+
+def test_extract_turns_raises_on_turn_containing_separator(spark, transcripts, tmp_path_factory):
+    """extract_turns re-splits the document on the separator, so a turn that
+    contains it cannot be split back: the query must raise, not shift text
+    against role/tool/ts.  The document itself still extracts byte-exact."""
+    import datetime as dt
+
+    from pyspark.errors import PySparkException
+
+    from deduputil_spark.sources.package import extract_turns
+
+    d = str(tmp_path_factory.mktemp("pkg_sep"))
+    ts = dt.datetime(2026, 1, 1, 12, 0, 0)
+    rows = spark.createDataFrame(
+        [("nl0001", 0, "user", "first line\nsecond line", None, ts),
+         ("nl0001", 1, "assistant", "reply", "bash", ts),
+         ("ok0001", 0, "user", "a clean turn", None, ts)],
+        schema=transcripts.schema,
+    )
+    create_package(spark, rows, d, CFG)
+    with pytest.raises(PySparkException, match="contains the separator"):
+        extract_turns(spark, d).collect()
+    got = {r["conv_id"]: r["doc_text"] for r in extract_package(spark, d).collect()}
+    assert got == {"nl0001": "first line\nsecond line\nreply", "ok0001": "a clean turn"}
+
+
+@pytest.mark.parametrize(
+    "other",
+    [
+        DedupConfig(block_size=512, block_min_size=64, block_max_size=1024),
+        DedupConfig(chunk_algo="fsp", block_size=256),
+    ],
+    ids=["block_size", "chunk_algo"],
+)
+def test_append_with_other_chunking_raises(spark, transcripts, tmp_path_factory, other):
+    """The package's chunking governs an append: a cfg that chunks differently
+    raises before anything is written, and the package is unchanged."""
+    d = str(tmp_path_factory.mktemp("pkg_guard"))
+    ids = sorted(r["conv_id"] for r in transcripts.select("conv_id").distinct().collect())
+    create_package(spark, transcripts.filter(F.col("conv_id").isin(ids[:20])), d, CFG)
+    names = list_package(spark, d).collect()
+    docs = sorted(map(tuple, extract_package(spark, d).collect()))
+    with pytest.raises(ValueError, match="package was created with"):
+        append_package(spark, transcripts.filter(F.col("conv_id").isin(ids[20:40])), d, other)
+    assert list_package(spark, d).collect() == names
+    assert sorted(map(tuple, extract_package(spark, d).collect())) == docs

@@ -1,28 +1,33 @@
-"""Streaming incremental dedup: micro-batch upserts must converge to the same
-state as one batch run (streaming/batch equivalence), resume idempotently,
-and round-trip."""
+"""Streaming incremental dedup: the stream's store is the package.  Micro-batch
+create/append must converge to the same blocks as one batch run
+(streaming/batch equivalence), a replayed batch must be a no-op, and the
+package must round-trip whole transcript rows."""
 
 from __future__ import annotations
 
 import os
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
+from deduputil_spark.cache import release_caches
 from deduputil_spark.config import DedupConfig
 from deduputil_spark.operators.assemble import assemble_documents
 from deduputil_spark.operators.chunk import chunk_documents
 from deduputil_spark.operators.dedup import build_block_store, build_file_meta
-from deduputil_spark.operators.reconstruct import reconstruct_documents, roundtrip_mismatches
-from deduputil_spark.streaming.incremental import (
-    DedupState,
-    apply_batch,
-    incremental_dedup_stream,
-    streaming_exact_dedup,
-)
+from deduputil_spark.operators.reconstruct import roundtrip_mismatches
+from deduputil_spark.sources.package import extract_package, extract_turns, open_package
+from deduputil_spark.streaming.incremental import incremental_dedup_stream, streaming_exact_dedup
 
 CFG = DedupConfig(block_size=256, block_min_size=64, block_max_size=1024)
+COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+
+def _run_stream(spark, src: str, pkg: str, ckpt: str) -> None:
+    """Drain the drop-zone into the package (availableNow) and wait."""
+    q = incremental_dedup_stream(spark, src, pkg, ckpt, CFG)
+    q.awaitTermination(120)
+    assert not q.isActive
 
 
 def test_microbatch_upserts_match_batch(spark, transcripts):
@@ -31,11 +36,14 @@ def test_microbatch_upserts_match_batch(spark, transcripts):
     third = len(convs) // 3
     batches = [convs[:third], convs[third : 2 * third], convs[2 * third :]]
     with tempfile.TemporaryDirectory() as d:
-        state = DedupState(spark, os.path.join(d, "state"))
+        src, pkg, ckpt = (os.path.join(d, n) for n in ("src", "pkg", "ckpt"))
+        # one drop per batch, each drained by a restart of the same stream:
+        # the first micro-batch creates the package, the next two append
         for ids in batches:
-            b = transcripts.filter(F.col("conv_id").isin(ids))
-            apply_batch(state, b, CFG)
-        sb, sm = state.read()
+            transcripts.filter(F.col("conv_id").isin(ids)).write.mode("append").parquet(src)
+            _run_stream(spark, src, pkg, ckpt)
+        p = open_package(spark, pkg)
+        sb, sm = p["blocks"], p["file_meta"]
         # batch-mode ground truth
         chunks = chunk_documents(assemble_documents(transcripts), CFG)
         bb = build_block_store(chunks)
@@ -45,46 +53,50 @@ def test_microbatch_upserts_match_batch(spark, transcripts):
         b_ = {r["md5"] for r in bb.select("md5").collect()}
         assert a == b_
         assert sm.count() == bm.count()
-        # bids dense + unique in streamed state
+        # bids dense + unique in the streamed package
         n = sb.count()
         mm = sb.agg(F.min("bid"), F.max("bid")).collect()[0]
         assert (mm[0], mm[1]) == (0, n - 1)
         assert sb.select("bid").distinct().count() == n
-        # round-trip from streamed state
-        recon = reconstruct_documents(sm, sb)
-        assert roundtrip_mismatches(transcripts, recon).count() == 0
+        # round-trip from the streamed package
+        assert roundtrip_mismatches(transcripts, extract_package(spark, pkg)).count() == 0
 
 
 def test_replayed_batch_is_noop(spark, transcripts):
     ids = [r["conv_id"] for r in transcripts.select("conv_id").distinct().limit(20).collect()]
-    b = transcripts.filter(F.col("conv_id").isin(ids))
     with tempfile.TemporaryDirectory() as d:
-        state = DedupState(spark, os.path.join(d, "state"))
-        apply_batch(state, b, CFG)
-        b1, m1 = state.read()
-        n_blocks, n_meta = b1.count(), m1.count()
-        apply_batch(state, b, CFG)  # replay (A4 idempotence)
-        b2, m2 = state.read()
-        assert b2.count() == n_blocks
-        assert m2.count() == n_meta
+        src, pkg = os.path.join(d, "src"), os.path.join(d, "pkg")
+        transcripts.filter(F.col("conv_id").isin(ids)).write.parquet(src)
+        _run_stream(spark, src, pkg, os.path.join(d, "ckpt1"))
+        p1 = open_package(spark, pkg)
+        n_blocks, n_meta = p1["blocks"].count(), p1["file_meta"].count()
+        h1 = p1["header"]
+        # a lost checkpoint replays the same batch into the package (A4 idempotence)
+        _run_stream(spark, src, pkg, os.path.join(d, "ckpt2"))
+        p2 = open_package(spark, pkg)
+        assert p2["blocks"].count() == n_blocks
+        assert p2["file_meta"].count() == n_meta
+        h2 = p2["header"]
+        assert (h2["block_num"], h2["file_num"]) == (h1["block_num"], h1["file_num"])
+        assert h2["file_num"] == n_meta == 20
 
 
 def test_streaming_source_end_to_end(spark, transcripts):
-    """Real readStream → foreachBatch → state tables with availableNow."""
+    """Real readStream → foreachBatch → package with availableNow; the
+    package returns whole rows, metadata included, and the handler releases
+    the frames create_package tracked."""
     with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
+        src, pkg = os.path.join(d, "src"), os.path.join(d, "pkg")
         ids = [r["conv_id"] for r in transcripts.select("conv_id").distinct().limit(30).collect()]
-        transcripts.filter(F.col("conv_id").isin(ids)).write.parquet(src)
-        q = incremental_dedup_stream(
-            spark, src, os.path.join(d, "state"), os.path.join(d, "ckpt"), CFG
-        )
-        q.awaitTermination(120)
-        state = DedupState(spark, os.path.join(d, "state"))
-        sb, sm = state.read()
-        assert sm.count() == 30
-        recon = reconstruct_documents(sm, sb)
         src_df = transcripts.filter(F.col("conv_id").isin(ids))
-        assert roundtrip_mismatches(src_df, recon).count() == 0
+        src_df.write.parquet(src)
+        release_caches()
+        _run_stream(spark, src, pkg, os.path.join(d, "ckpt"))
+        assert release_caches() == 0
+        assert open_package(spark, pkg)["header"]["file_num"] == 30
+        want = sorted(map(tuple, src_df.select(*COLS).collect()))
+        got = sorted(map(tuple, extract_turns(spark, pkg).select(*COLS).collect()))
+        assert got == want
 
 
 def test_streaming_exact_dedup_plan(spark, transcripts):
@@ -112,68 +124,3 @@ def test_streaming_exact_dedup_plan(spark, transcripts):
         q.awaitTermination(120)
         got = spark.read.parquet(out)
         assert got.count() == 2  # one of the two "same text" turns suppressed
-
-
-def test_stateful_streaming_sessionization_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionization: closed sessions from the stream
-    equal the batch gap-rule sessions (a far-future flush tick per user closes
-    every real session; the tick's own singleton session stays open)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from deduputil_spark.streaming.sessionize import sessionize_stream
-
-    gap_s = 600
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rows = []
-    # u1: 3 sessions (gaps 2h); u2: 1 session of 5 events; u3: 2 singletons
-    for k in range(3):
-        for j in range(4):
-            rows.append(("u1", base + dt.timedelta(hours=2 * k, minutes=j)))
-    for j in range(5):
-        rows.append(("u2", base + dt.timedelta(minutes=3 * j)))
-    rows.append(("u3", base))
-    rows.append(("u3", base + dt.timedelta(hours=5)))
-    flush = base + dt.timedelta(days=30)
-    for u in ("u1", "u2", "u3"):
-        rows.append((u, flush))
-    src = str(tmp_path / "events_src")
-    pd.DataFrame(rows, columns=["user_id", "ts"]).astype({"ts": "datetime64[us]"}).to_parquet(
-        src + ".parquet"
-    )
-    import os
-
-    os.makedirs(src, exist_ok=True)
-    os.rename(src + ".parquet", os.path.join(src, "part0.parquet"))
-
-    stream = spark.readStream.schema("user_id string, ts timestamp").parquet(src)
-    out = sessionize_stream(stream, gap_s=gap_s, watermark="0 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql("SELECT * FROM sess_out").collect()
-    }
-    # batch oracle: gap rule over the same rows, dropping each user's open
-    # (flush-tick) session
-    want = set()
-    bydf = pd.DataFrame(rows, columns=["user_id", "ts"]).sort_values(["user_id", "ts"])
-    for u, grp in bydf.groupby("user_id"):
-        ts = list(grp["ts"])
-        start, last, n = ts[0], ts[0], 1
-        for t in ts[1:]:
-            if (t - last).total_seconds() > gap_s:
-                want.add((u, start, last, n))
-                start, last, n = t, t, 1
-            else:
-                last, n = t, n + 1
-        # open session (the flush tick) intentionally not emitted
-    assert got == want, (sorted(got), sorted(want))
